@@ -5,7 +5,7 @@ Submit:
     python package.py                      # builds dist/nginx_log_spark.zip
     spark-submit --py-files dist/nginx_log_spark.zip jobs/run_pipeline.py \
         --input  <sequences parquet/iceberg path> \
-        --output <sink base path> [--resume] [--no-enrich]
+        --output <sink base path> [--resume] [--report]
 
 On a cluster the input would be the Iceberg table of tokenized sequences
 (BASELINE.json input_hint); locally any parquet with the same schema works.
@@ -23,7 +23,6 @@ def main() -> int:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--no-enrich", action="store_true")
     ap.add_argument("--report", action="store_true", help="print the CLI report too")
     args = ap.parse_args()
 
@@ -40,7 +39,7 @@ def main() -> int:
     else:
         from nginx_log_spark.pipeline import run_pipeline
 
-        res = run_pipeline(spark, seq, out_base=args.output, enrich=not args.no_enrich)
+        res = run_pipeline(spark, seq, out_base=args.output)
         res.metrics.show(truncate=False)
         if args.report:
             from pyspark.sql import functions as F

@@ -20,8 +20,10 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from nginx_log_spark.fsutil import read_parquet_or_empty
 
 
 def with_lineage(df: DataFrame, run_id: str, unit: str) -> DataFrame:
@@ -33,24 +35,29 @@ def with_lineage(df: DataFrame, run_id: str, unit: str) -> DataFrame:
     )
 
 
-def partition_metrics(parsed: DataFrame) -> DataFrame:
-    """Per physical-partition parse metrics (rows, accepted, rejected, bytes)
-    — computed as a plain aggregation, no driver collection of row data."""
-    return parsed.groupBy(F.spark_partition_id().alias("part_id")).agg(
+def _metric_aggs() -> list[Column]:
+    """The parse metrics (rows, accepted, rejected, bytes_sent) of a parsed
+    frame, shared by the per-partition table and the per-unit manifest."""
+    return [
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.col("valid").cast("long")).alias("accepted"),
         F.sum((~F.col("valid")).cast("long")).alias("rejected"),
         F.sum(F.coalesce(F.col("body_bytes_sent"), F.lit(0))).alias("bytes_sent"),
-    )
+    ]
+
+
+def partition_metrics(parsed: DataFrame) -> DataFrame:
+    """Per physical-partition parse metrics (rows, accepted, rejected, bytes)
+    — computed as a plain aggregation, no driver collection of row data."""
+    return parsed.groupBy(F.spark_partition_id().alias("part_id")).agg(*_metric_aggs())
 
 
 def read_manifest(spark: SparkSession, manifest_path: str) -> set[str]:
-    try:
-        return {
-            r["unit"] for r in spark.read.parquet(manifest_path).select("unit").collect()
-        }
-    except Exception:  # first run: no manifest yet
-        return set()
+    """Units already completed. No manifest yet (first run) is the empty
+    set; an unreadable one raises — treating it as empty would re-run every
+    unit and append duplicate manifest rows."""
+    manifest = read_parquet_or_empty(spark, manifest_path, "unit string")
+    return {r["unit"] for r in manifest.select("unit").collect()}
 
 
 def run_resumable(
@@ -96,12 +103,7 @@ def run_resumable(
                 "_unit"
             ).parquet(f"{base_path}/rejects")
             m = (
-                parsed.agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum(F.col("valid").cast("long")).alias("accepted"),
-                    F.sum((~F.col("valid")).cast("long")).alias("rejected"),
-                    F.sum(F.coalesce(F.col("body_bytes_sent"), F.lit(0))).alias("bytes_sent"),
-                )
+                parsed.agg(*_metric_aggs())
                 .withColumn("unit", F.lit(unit))
                 .withColumn("run_id", F.lit(run_id))
                 .withColumn("completed_at", F.lit(time.time()))

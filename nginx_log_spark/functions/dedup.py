@@ -41,20 +41,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def shingles_expr(text_col: str, k: int) -> Column:
-    """Distinct character k-shingles of the normalized text (native SQL).
-
-    NB: only reference PRE-PROJECTED columns here — an inline
-    regexp_replace inside the transform lambda would be recomputed per
-    array element (O(len^2) regex work). Use with_shingles() instead when
-    building plans."""
-    norm = f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(length({norm}) - {k} + 1, 1)), "
-        f"i -> substring({norm}, i, {k})))"
-    )
-
-
 def with_shingles(df: DataFrame, text_col: str, k: int, out_col: str = "_sh") -> DataFrame:
     """Project normalized text ONCE, then shingle it — the lambda references
     the materialized column, so the normalization regex runs once per row,
@@ -634,7 +620,7 @@ def _rank_bcast_prefix(
     doc's array and the broadcast vocabulary, so the mask costs one extra
     O(|doc|) loop and |docs| extra rows — no second scan, no second
     Python boundary. Consumed by prefix_jaccard_pairs' popcount verify
-    (see ``mask_verify_max``); prefix-row consumers are unaffected (an
+    (see ``MASK_VERIFY_MAX``); prefix-row consumers are unaffected (an
     equi-join on ``_s`` drops null keys, and the callers filter
     explicitly). Bit assignment is a bijection vocabulary -> [0, |V|)
     with no hashing anywhere, so unlike the xxhash64 recode there is no
@@ -703,6 +689,14 @@ def _rank_bcast_prefix(
     return sh.mapInArrow(op, schema)
 
 
+# prefix_jaccard_pairs' vocabulary gates and skew-head cap (see its
+# docstring); module constants, so a test forces the other side of a gate
+# by patching the constant
+FREQ_HEAD_BCAST = 4096
+RANK_BCAST_MAX = 1 << 20
+MASK_VERIFY_MAX = 1 << 13
+
+
 def prefix_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -710,9 +704,6 @@ def prefix_jaccard_pairs(
     shingle_k: int = 5,
     threshold: float = 0.7,
     broadcast_verify: bool = False,
-    freq_head_bcast: int | None = 4096,
-    rank_bcast_max: int | None = 1 << 20,
-    mask_verify_max: int | None = 1 << 13,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs at >= threshold via PREFIX FILTERING
     (the all-pairs similarity join of Bayardo et al., WWW 2007 / the
@@ -765,73 +756,60 @@ def prefix_jaccard_pairs(
     when ``df`` is a full web-scale corpus: there the candidate set is
     sparse and the pairs-bounded shuffle is the right plan.
 
-    ``freq_head_bcast``: the exploded-rows -> frequency annotation join
-    shuffles on the shingle key, which is Zipf-skewed — a stop-shingle
-    ("the ", " and ") present in most docs puts its entire row mass in
-    one shuffle partition, the classic straggler at 100x scale. With
-    ``freq_head_bcast = H`` the H highest-df shingles (deterministic:
-    df desc, shingle asc; driver-bounded collect of <= H tiny rows) are
-    BROADCAST and annotated map-side, and only the tail — where every
-    key's row count is <= the head's minimum df by construction — takes
-    the shuffle join. The _df values are identical either way, so the
-    result is exactly unchanged; set None/0 to restore the single
-    shuffle join (AQE skew-split then handles moderate skew at runtime).
+    Every path below reads the shingle table and the (shingle -> document
+    frequency) table through ONE localCheckpoint each: the shingling
+    projection (regex normalize + k-gram transform, the dominant scan
+    cost) feeds up to six consumers that Catalyst cannot reuse one
+    exchange across; measured 2.3x on the dense bench fixture vs
+    recomputing. Blocks are MEMORY_AND_DISK and are released by the
+    ContextCleaner when the result frame is dropped. The path is then
+    chosen by the corpus VOCABULARY size (distinct shingles — bounded by
+    content diversity, not corpus size), counted once on the
+    materialized frequency table:
 
-    Cost note: the head/tail split spans FOUR disconnected consumers of
-    the shingled corpus (the head-selection job, the hot probe, the cold
-    probe, the tail re-aggregation) plus the two verify sides — subtrees
-    Catalyst cannot reuse one exchange across. The shingling projection
-    (regex normalize + k-gram transform, the dominant scan cost) and the
-    vocab-sized frequency table are therefore materialized ONCE via
-    localCheckpoint when this mode is on (the mode is already eager by
-    construction — head selection collects at call time), and every
-    downstream pass reads the stored blocks; measured 2.3x on the dense
-    bench fixture vs recomputing. Blocks are MEMORY_AND_DISK and are
-    released by the ContextCleaner when the result frame is dropped.
+    - vocabulary <= ``RANK_BCAST_MAX`` (2^20, ~100 MB dict per python
+      worker): the per-doc prefix is computed IN-ROW against a broadcast
+      (shingle -> df) dict (_rank_bcast_prefix) instead of the explode ->
+      annotate-join -> rank-window pipeline. The Zipf-skewed shingle key
+      then never touches any shuffle. The verified result set is provably
+      unchanged (prefix filtering is exact under ANY global order and the
+      verify is exact — candidate sets may differ, results cannot).
+    - above it, the relational path — the 100 TB shape for
+      open-vocabulary corpora. Its exploded-rows -> frequency annotation
+      join shuffles on the shingle key, which is Zipf-skewed: a
+      stop-shingle ("the ", " and ") present in most docs would put its
+      entire row mass in one shuffle partition. So the
+      ``FREQ_HEAD_BCAST`` (4096) highest-df shingles (deterministic: df
+      desc, shingle asc; driver-bounded collect of <= 4096 tiny rows) are
+      BROADCAST and annotated map-side, and only the tail — where every
+      key's row count is <= the head's minimum df by construction — takes
+      the shuffle join. The _df values are those of one plain join, so
+      the result is unchanged.
 
-    ``rank_bcast_max`` (round 6): in freq_head_bcast mode, when the
-    corpus VOCABULARY (distinct shingles — bounded by content diversity,
-    not corpus size; checked with one count on the already-materialized
-    frequency table) is at most this many entries, the per-doc prefix is
-    computed IN-ROW against a broadcast (shingle -> df) dict
-    (_rank_bcast_prefix) instead of the explode -> annotate-join ->
-    rank-window pipeline. The Zipf-skewed shingle key then never touches
-    any shuffle, subsuming the head-broadcast hardening below; the
-    verified result set is provably unchanged (prefix filtering is exact
-    under ANY global order and the verify is exact — candidate sets may
-    differ, results cannot). Default 2^20 entries (~100 MB dict per
-    python worker); above it, or with 0/None, the relational path below
-    runs unchanged — the 100 TB shape for open-vocabulary corpora.
-
-    Verify encoding (round 6): in freq_head_bcast mode the
-    |candidates|-bounded verify intersects xxhash64-recoded LONG arrays
-    instead of the UTF8 shingle strings — measured 2.6x on the verify
-    stage, which dominates dense corpora. This is EXACT, not
-    approximate: the recode is only used after a vocab-sized aggregate
-    proves xxhash64 injective on this corpus's vocabulary (zero
-    collisions -> bijection -> every intersection and array size is
-    identical); on a collision (~|vocab|^2/2^64) the string verify runs
-    instead, so the result set can never differ.
-
-    ``mask_verify_max`` (round 6): on the in-row ranking path, when the
-    vocabulary additionally fits this many entries (default 2^13 ->
-    <= 128 longs = 1 KB of bitset per doc), the verify drops the array
-    intersect entirely: the ranking pass emits each doc's shingle set as
-    a dense BITSET (bit position = rank in the sorted vocabulary — an
-    assigned bijection, no hashing, no collision caveat), and
+    Verify encoding, in-row path with vocabulary <= ``MASK_VERIFY_MAX``
+    (2^13 -> <= 128 longs = 1 KB of bitset per doc): the verify drops the
+    array intersect entirely. The ranking pass emits each doc's shingle
+    set as a dense BITSET (bit position = rank in the sorted vocabulary —
+    an assigned bijection, no hashing, no collision caveat), and
     |A∩B| = sum over words of bit_count(maskA AND maskB). ~32 word ops
     per pair instead of a ~|doc|-element hash-set intersect — measured
     4x on the verify stage (0.9-1.1 s -> 0.2-0.3 s on the 505k-candidate
     dense sf0.1 fixture) with byte-identical output (the sizes come from
     the same |shingle set| the array path measures; the division is the
-    same int/int -> double expression). The gate is a bound on CONTENT
-    DIVERSITY (distinct shingles), not corpus size — above it the
-    xxhash64-recode array verify below runs unchanged, which is the
-    open-vocabulary 100 TB shape. Set 0/None to disable.
+    same int/int -> double expression).
+
+    Verify encoding otherwise: the |candidates|-bounded verify intersects
+    xxhash64-recoded LONG arrays instead of the UTF8 shingle strings —
+    measured 2.6x on the verify stage, which dominates dense corpora.
+    This is EXACT, not approximate: the recode is only used after a
+    vocab-sized aggregate proves xxhash64 injective on this corpus's
+    vocabulary (zero collisions -> bijection -> every intersection and
+    array size is identical); on a collision (~|vocab|^2/2^64) the string
+    verify runs instead, so the result set can never differ.
 
     Scale shape: one explode + vocab-sized groupBy for frequencies
-    (head/tail split as above), a per-doc window over uniform id keys
-    for ranks, an equi-join on prefix shingles only (~(1-t) of the
+    (head/tail split as above), in-row ranks or a per-doc window over
+    uniform id keys, an equi-join on prefix shingles only (~(1-t) of the
     original volume, rare-first), and a |candidates|-bounded verify. No
     all-pairs step anywhere."""
     from pyspark.sql import Window
@@ -841,69 +819,62 @@ def prefix_jaccard_pairs(
     sh = with_shingles(
         ensure_parallelism(df.select(id_col, text_col)), text_col, shingle_k
     ).select(F.col(id_col), F.col("_sh"))
-    if freq_head_bcast:
-        # one shingling pass for the 6 downstream consumers (see docstring
-        # cost note); eager is free — this mode collects the head below
-        sh = sh.localCheckpoint(eager=True)
+    # one shingling pass for the downstream consumers (see docstring);
+    # eager is free — the gates below count the vocabulary at call time
+    sh = sh.localCheckpoint(eager=True)
     ex = sh.select(id_col, F.size("_sh").alias("_n"), F.explode("_sh").alias("_s"))
-    freq = ex.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-    prefix = None
+    # vocab-sized; consumed by the gates, the verify recode check and
+    # (relational path) head selection and the tail anti-join
+    freq = (
+        ex.groupBy("_s").agg(F.count(F.lit(1)).alias("_df")).localCheckpoint(eager=True)
+    )
+    spark = df.sparkSession
+    nvocab = freq.count()
     masks = None
-    if freq_head_bcast:
-        spark = df.sparkSession
-        # vocab-sized; consumed by head selection AND the tail anti-join
-        freq = freq.localCheckpoint(eager=True)
-        nvocab = freq.count() if rank_bcast_max else None
-        if rank_bcast_max and nvocab <= rank_bcast_max:
-            # vocabulary fits a broadcast: rank in-row, skip the
-            # annotate joins AND the window entirely (see helper)
-            # materialize the prefix ONCE: it feeds both self-join sides,
-            # and unlike the relational path (whose window exchange is
-            # already reused — measured no-gain, see docstring) the
-            # mapInArrow pass would otherwise pay the Python boundary
-            # twice. |prefix| <= ~(1-t)+eps of the shingle rows, and the
-            # blocks follow the same MEMORY_AND_DISK / ContextCleaner
-            # lifecycle as the sh checkpoint above. Measured 4.1 -> 3.5 s
-            # median on the dense sf0.1 fixture.
-            use_masks = bool(mask_verify_max) and nvocab <= mask_verify_max
-            combined = _rank_bcast_prefix(
-                spark, sh, freq, id_col, threshold, emit_masks=use_masks
-            ).localCheckpoint(eager=True)
-            if use_masks:
-                # one checkpointed frame carries both row kinds: the
-                # prefix rows (for the candidate self-join) and one
-                # bitset row per doc (for the popcount verify) — the
-                # split below is a stored-block filter, not a recompute
-                prefix = combined.filter(F.col("_s").isNotNull()).select(
-                    id_col, "_n", "_s", "_rk"
-                )
-                masks = combined.filter(F.col("_s").isNull()).select(
-                    id_col, "_mask", "_n"
-                )
-            else:
-                prefix = combined
-    if prefix is None:
-        if freq_head_bcast:
-            # driver-bounded by construction: <= freq_head_bcast
-            # (shingle, df) rows — the Zipf head is tiny relative to any
-            # corpus vocabulary
-            head_rows = (
-                freq.orderBy(F.desc("_df"), F.asc("_s"))
-                .limit(freq_head_bcast)
-                .collect()
+    if nvocab <= RANK_BCAST_MAX:
+        # vocabulary fits a broadcast: rank in-row, skip the
+        # annotate joins AND the window entirely (see helper)
+        # materialize the prefix ONCE: it feeds both self-join sides,
+        # and the mapInArrow pass would otherwise pay the Python boundary
+        # twice. |prefix| <= ~(1-t)+eps of the shingle rows, and the
+        # blocks follow the same MEMORY_AND_DISK / ContextCleaner
+        # lifecycle as the sh checkpoint above. Measured 4.1 -> 3.5 s
+        # median on the dense sf0.1 fixture.
+        use_masks = nvocab <= MASK_VERIFY_MAX
+        combined = _rank_bcast_prefix(
+            spark, sh, freq, id_col, threshold, emit_masks=use_masks
+        ).localCheckpoint(eager=True)
+        if use_masks:
+            # one checkpointed frame carries both row kinds: the
+            # prefix rows (for the candidate self-join) and one
+            # bitset row per doc (for the popcount verify) — the
+            # split below is a stored-block filter, not a recompute
+            prefix = combined.filter(F.col("_s").isNotNull()).select(
+                id_col, "_n", "_s", "_rk"
             )
-            head = spark.createDataFrame(
-                [(r["_s"], r["_df"]) for r in head_rows], "_s string, _df long"
+            masks = combined.filter(F.col("_s").isNull()).select(
+                id_col, "_mask", "_n"
             )
-            hot = ex.join(F.broadcast(head), "_s")  # map-side: no hot-key shuffle
-            tail_freq = freq.join(F.broadcast(head.select("_s")), "_s", "left_anti")
-            cold = ex.join(F.broadcast(head.select("_s")), "_s", "left_anti").join(
-                tail_freq, "_s"
-            )
-            annotated = hot.unionByName(cold)
         else:
-            annotated = ex.join(freq, "_s")
-        ranked = annotated.withColumn(
+            prefix = combined
+    else:
+        # driver-bounded by construction: <= FREQ_HEAD_BCAST
+        # (shingle, df) rows — the Zipf head is tiny relative to any
+        # corpus vocabulary
+        head_rows = (
+            freq.orderBy(F.desc("_df"), F.asc("_s"))
+            .limit(FREQ_HEAD_BCAST)
+            .collect()
+        )
+        head = spark.createDataFrame(
+            [(r["_s"], r["_df"]) for r in head_rows], "_s string, _df long"
+        )
+        hot = ex.join(F.broadcast(head), "_s")  # map-side: no hot-key shuffle
+        tail_freq = freq.join(F.broadcast(head.select("_s")), "_s", "left_anti")
+        cold = ex.join(F.broadcast(head.select("_s")), "_s", "left_anti").join(
+            tail_freq, "_s"
+        )
+        ranked = hot.unionByName(cold).withColumn(
             "_rk",
             F.row_number().over(
                 Window.partitionBy(id_col).orderBy(F.asc("_df"), F.asc("_s"))
@@ -944,8 +915,8 @@ def prefix_jaccard_pairs(
         .select("id_a", "id_b")
     )
     if masks is not None:
-        # popcount verify (see mask_verify_max docstring): exact by the
-        # assigned shingle->bit bijection; _n is the same |shingle set|
+        # popcount verify (see MASK_VERIFY_MAX in the docstring): exact by
+        # the assigned shingle->bit bijection; _n is the same |shingle set|
         # F.size measures on the array path, and the division is the
         # identical int/int -> double expression, so the emitted jaccard
         # is bit-identical to the array-intersect verify
@@ -970,26 +941,25 @@ def prefix_jaccard_pairs(
             joined.filter(raw >= threshold)
             .select("id_a", "id_b", F.round(raw, 6).alias("jaccard"))
         )
+    # Verify-side long recode: array_intersect over ~300-element UTF8
+    # string arrays is the dominant cost of the whole join (measured
+    # 2.6x slower than the identical intersect over longs). Recode
+    # each doc's shingle set as xxhash64 values — EXACT, not
+    # approximate, because we first prove injectivity on this corpus's
+    # vocabulary against the already-materialized frequency table (one
+    # vocab-sized aggregate): zero collisions means the recode is a
+    # bijection on every shingle in play, so all intersection sizes
+    # (and array sizes) are identical to the string computation. On a
+    # collision (probability ~|vocab|^2 / 2^64) we fall back to the
+    # string verify, so the result set can never differ.
+    n_coll = freq.agg(
+        (F.count(F.lit(1)) - F.countDistinct(F.xxhash64("_s"))).alias("c")
+    ).first()["c"]
     vsh = sh
-    if freq_head_bcast:
-        # Verify-side long recode: array_intersect over ~300-element UTF8
-        # string arrays is the dominant cost of the whole join (measured
-        # 2.6x slower than the identical intersect over longs). Recode
-        # each doc's shingle set as xxhash64 values — EXACT, not
-        # approximate, because we first prove injectivity on this corpus's
-        # vocabulary against the already-materialized frequency table (one
-        # vocab-sized aggregate): zero collisions means the recode is a
-        # bijection on every shingle in play, so all intersection sizes
-        # (and array sizes) are identical to the string computation. On a
-        # collision (probability ~|vocab|^2 / 2^64) we fall back to the
-        # string verify, so the result set can never differ.
-        n_coll = freq.agg(
-            (F.count(F.lit(1)) - F.countDistinct(F.xxhash64("_s"))).alias("c")
-        ).first()["c"]
-        if n_coll == 0:
-            vsh = sh.select(
-                id_col, F.transform("_sh", lambda s: F.xxhash64(s)).alias("_sh")
-            )
+    if n_coll == 0:
+        vsh = sh.select(
+            id_col, F.transform("_sh", lambda s: F.xxhash64(s)).alias("_sh")
+        )
     sa = vsh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
     sb = vsh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
     if broadcast_verify:

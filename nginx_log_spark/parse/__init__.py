@@ -5,21 +5,17 @@ from nginx_log_spark.parse.arrow_parser import (  # noqa: F401
     parse_tier_stats,
     token_histogram,
 )
+# parser.py is the spec + codecs; the engine is arrow_parser (RE2 strict
+# tier + the spec's exact-atomic-regex fallback)
 from nginx_log_spark.parse.parser import (  # noqa: F401
     CORE_PATTERN,
     PARSED_FIELDS,
     decode_tokens,
-    parsed_schema,
 )
 from nginx_log_spark.parse.text_source import (  # noqa: F401
     codec_splittable,
     read_log_lines,
 )
-from nginx_log_spark.parse.parser import parse_lines as parse_lines_pandas  # noqa: F401
-from nginx_log_spark.parse.parser import parse_sequences as parse_sequences_pandas  # noqa: F401
 
-# engine defaults: the Arrow-native two-tier parser (RE2 strict path +
-# exact-atomic-regex fallback) — same semantics as the pandas path, ~20x
-# the throughput (see tests/test_arrow_parser.py for the parity proof)
 parse_sequences = parse_sequences_arrow
 parse_lines = parse_lines_arrow

@@ -1,6 +1,6 @@
 """Vectorized Arrow-native parser — the engine's hot path.
 
-Two-tier design (exactly the reference's semantics, 100x its pandas cost):
+Two-tier design (exactly the reference's semantics):
 
 - STRICT tier (C++/RE2, ``pyarrow.compute.extract_regex``): the canonical
   combined format with single spaces. Works on BINARY arrays built
@@ -31,7 +31,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-from nginx_log_spark.parse.parser import _CORE_RE, PARSED_FIELDS, parsed_schema
+from nginx_log_spark.parse.parser import _CORE_RE, PARSED_FIELDS
 
 FIELD_NAMES = [n for n, _ in PARSED_FIELDS[:9]]
 
@@ -152,6 +152,28 @@ def _uncapture(pattern: str, keep: set[str]) -> str:
     )
 
 
+def _match_two_tier(
+    lines: pa.BinaryArray, pattern: str, fallback
+) -> tuple[pa.BooleanArray, pa.BooleanArray]:
+    """Valid-only two-tier rule -> (strict, valid) boolean arrays.
+
+    The boolean strict match has the same match set as extraction (the
+    null-result rows of extract_regex are exactly the non-matching rows)
+    and is 6.6x cheaper; the Python ``fallback`` still decides validity
+    for the misses."""
+    strict = pc.match_substring_regex(lines, pattern=pattern)
+    miss = pc.invert(strict)
+    if not (pc.sum(miss).as_py() or 0):
+        return strict, strict
+    miss_np = miss.to_numpy(zero_copy_only=False)
+    fb_lines = pc.take(lines, pa.array(np.nonzero(miss_np)[0])).to_pylist()
+    fb_valid = [
+        raw is not None and fallback(raw.decode("latin-1")) is not None
+        for raw in fb_lines
+    ]
+    return strict, pc.replace_with_mask(strict, pa.array(miss_np), pa.array(fb_valid))
+
+
 def _parse_binary_lines(
     lines: pa.BinaryArray,
     extended: bool = False,
@@ -160,7 +182,7 @@ def _parse_binary_lines(
 ) -> dict[str, pa.Array]:
     """BinaryArray of raw lines -> {field: Array} + 'valid' (the full
     two-tier parse). Field arrays are utf8 (latin-1 transcoding for any
-    non-UTF8 bytes, matching the pandas path).
+    non-UTF8 bytes, as ``decode_tokens`` does).
 
     ``needed``: projection pushdown INTO the kernel (None = all fields).
     Validity is always computed with the identical two-tier rule; the
@@ -181,23 +203,7 @@ def _parse_binary_lines(
     fb_pos = [all_names.index(n) for n in names]
 
     if not names:
-        # valid-only: boolean strict match (same match set as extraction —
-        # null-result rows of extract_regex are exactly the non-matching
-        # rows), Python fallback still decides validity for the misses
-        matched = pc.match_substring_regex(lines, pattern=pattern)
-        miss = pc.invert(matched)
-        n_miss = pc.sum(miss).as_py() or 0
-        valid = matched
-        if n_miss:
-            miss_np = miss.to_numpy(zero_copy_only=False)
-            idx = np.nonzero(miss_np)[0]
-            fb_lines = pc.take(lines, pa.array(idx)).to_pylist()
-            fb_valid = [
-                raw is not None and fallback(raw.decode("latin-1")) is not None
-                for raw in fb_lines
-            ]
-            valid = pc.replace_with_mask(valid, pa.array(miss_np), pa.array(fb_valid))
-        return {"valid": valid}
+        return {"valid": _match_two_tier(lines, pattern, fallback)[1]}
 
     if len(names) < len(all_names):
         pattern = _uncapture(pattern, set(names))
@@ -364,33 +370,20 @@ def parse_tier_stats(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     this when a parse workload is unexpectedly slow: a high
     n_fallback_ok + n_reject share IS the explanation, visible instead of
     silent (VERDICT r1 'what's wrong' #6)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
     def op(batches):
         for b in batches:
-            tok = b.column(b.schema.get_field_index(tokens_col))
-            lines = _tokens_to_binary(tok)
-            # boolean strict-match kernel: same match set as extract_regex
-            # (nulls there == non-matches here), 6.6x cheaper — this op
-            # only counts tiers, it never reads a submatch
-            miss = pc.invert(
-                pc.match_substring_regex(lines, pattern=STRICT_PATTERN)
-            )
+            lines = _tokens_to_binary(b.column(b.schema.get_field_index(tokens_col)))
+            strict, valid = _match_two_tier(lines, STRICT_PATTERN, _exact_parse_line)
             n = len(lines)
-            n_miss = pc.sum(miss).as_py() or 0
-            n_fb_ok = 0
-            if n_miss:
-                idx = np.nonzero(miss.to_numpy(zero_copy_only=False))[0]
-                for raw in pc.take(lines, pa.array(idx)).to_pylist():
-                    if raw is not None and _exact_parse_line(raw.decode("latin-1")):
-                        n_fb_ok += 1
+            n_strict = pc.sum(strict).as_py() or 0
+            n_valid = pc.sum(valid).as_py() or 0
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array([n], pa.int64()),
-                    pa.array([n - n_miss], pa.int64()),
-                    pa.array([n_fb_ok], pa.int64()),
-                    pa.array([n_miss - n_fb_ok], pa.int64()),
+                    pa.array([n_strict], pa.int64()),
+                    pa.array([n_valid - n_strict], pa.int64()),
+                    pa.array([n - n_valid], pa.int64()),
                 ],
                 ["n_rows", "n_strict", "n_fallback_ok", "n_reject"],
             )

@@ -4,12 +4,13 @@ Reproduces the reference's report byte stream (c/main.c:485-523): header
 totals (:487-494), eight count tables (print_stat_long :246-278), the bytes
 table (print_sent_long :280-321), and per-bad-code sections (print_code_long
 :323-360), each with top-100 rows, %.2f percentages, and the 前100项占比
-coverage footer. Verified against the COMPILED C binary in
-tests/test_golden_c.py (byte-equal modulo within-table tie order — the
-reference's qsort is unstable, c/hash.c:173-200).
+coverage footer. tests/test_golden_c.py compares it with the COMPILED C
+binary (byte-equal modulo within-table tie order — the reference's qsort
+is unstable, c/hash.c:173-200); that test skips when the reference source
+is not mounted.
 
-Engine side: ONE fused Spark job (reports.fused_reports /
-fused_reports_arrow) supplies every table, the distinct-key counts
+Engine side: ONE fused Spark job (``render_full_report`` runs
+reports.fused_reports) supplies every table, the distinct-key counts
 (section_keys) and the header totals (section_total/section_bytes) in a
 single collect — the renderer itself is pure driver-side string work over
 <= a few thousand rows.
@@ -203,14 +204,3 @@ def render_full_report(
     # a handful of totals plus <= k rows per ranked section (k default 100)
     return render_from_fused(fused_reports(parsed, k).collect(), k, width, color)
 
-
-def render_report_from_sequences(
-    seq: DataFrame, k: int = 100, width: int | None = None, color: bool = True
-) -> str:
-    """Render straight off the tokenized sequences table via the fused
-    parse+partial-agg Arrow pass (reports.fused_reports_arrow) — the fastest
-    path: parse and aggregation share one scan, nothing but ~10^5-row
-    partials ever leaves the Python workers."""
-    from nginx_log_spark.reports.reports import fused_reports_arrow
-
-    return render_from_fused(fused_reports_arrow(seq, k).collect(), k, width, color)

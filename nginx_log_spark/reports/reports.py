@@ -1,11 +1,12 @@
 """The reference's aggregate reports as lazy DataFrame functions.
 
-Each mirrors one hash-table aggregate of the reference's single pass
-(c/main.c:460-477) plus its report-time sort/top-K (c/main.c:246-360).
-All take the PARSED DataFrame (output of ``parse_sequences``/``parse_lines``,
-already filtered to ``valid``) and return unexecuted DataFrames, so callers
-can fuse them off one cached parsed intermediate — the Spark analogue of the
-reference computing 10 aggregates in one scan.
+Each per-report function mirrors one hash-table aggregate of the
+reference's single pass (c/main.c:460-477) plus its report-time sort/top-K
+(c/main.c:246-360); the graded queries call them one at a time. All take
+the PARSED DataFrame (output of ``parse_sequences``/``parse_lines``, already
+filtered to ``valid``) and return unexecuted DataFrames. The full report
+comes from ``fused_reports``: every aggregate in one scan and one shuffle —
+the Spark analogue of the reference computing 10 aggregates in one pass.
 
 Scale notes (100 TB):
 - every report is groupBy(low-cardinality key) -> partial+final hash agg:
@@ -135,21 +136,6 @@ def bad_code_breakdown(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
             F.round(F.col("section_total") / F.col("_tot") * 100.0, 2).alias("section_pct_of_total"),
         )
         .orderBy(F.asc("status"), F.desc("cnt"), F.asc("request"))
-    )
-
-
-def bad_code_sections(parsed: DataFrame) -> DataFrame:
-    """Section headers: per bad code, hits + pct of all lines (c/main.c:332)."""
-    agg = (
-        parsed.filter(F.col("status") != "200")
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    tot = parsed.agg(F.count(F.lit(1)).alias("_tot"))
-    return (
-        _with_pct(agg, "hits", tot, "_tot")
-        .select("status", "hits", "pct")
-        .orderBy(F.asc("status"))
     )
 
 
@@ -505,14 +491,3 @@ def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "token
     partials = seq.mapInArrow(op, "dim_id int, key0 string, cnt long, bytes long")
     return _rank_partials(partials, k)
 
-
-def all_reports(parsed: DataFrame, k: int = TOP_K) -> dict[str, DataFrame]:
-    """The full report set off one (cached) parsed DataFrame."""
-    out = {"totals": totals(parsed)}
-    for name, key in REPORT_KEYS.items():
-        out[name] = top_counts(parsed, key, k)
-    out["bytes_by_request"] = bytes_by_request(parsed, k)
-    out["bad_code_sections"] = bad_code_sections(parsed)
-    out["bad_code_breakdown"] = bad_code_breakdown(parsed, k)
-    out["hourly_traffic"] = hourly_traffic(parsed)
-    return out

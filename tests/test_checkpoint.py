@@ -55,3 +55,16 @@ def test_lineage_columns(spark, tmp_path):
     routed = spark.read.parquet(f"{base}/routed")
     assert {"run_id", "lineage_unit", "lineage_part"} <= set(routed.columns)
     assert routed.filter(F.col("lineage_unit") != F.col("source")).count() == 0
+
+
+def test_corrupt_manifest_fails_loudly(spark, tmp_path):
+    """An unreadable manifest must raise before any unit runs: reading it
+    as "no units done" would re-run every unit and append duplicate
+    manifest rows."""
+    base = tmp_path / "ckpt3"
+    (base / "_manifest").mkdir(parents=True)
+    (base / "_manifest" / "part-00000-corrupt.parquet").write_bytes(b"not parquet")
+    seq = loggen.sequences_df(spark, 200, partitions=2)
+    with pytest.raises(Exception, match="not a Parquet file"):
+        run_resumable(spark, seq, str(base))
+    assert not (base / "routed").exists()

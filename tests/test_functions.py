@@ -1275,20 +1275,20 @@ def test_prefix_jaccard_equals_exhaustive(spark):
         assert want, f"threshold={t}: vacuous fixture"
 
 
-def test_prefix_jaccard_mask_verify_parity(spark):
-    """Round-6 bitset verify (mask_verify_max): with the vocabulary under
+def test_prefix_jaccard_mask_verify_parity(spark, monkeypatch):
+    """Round-6 bitset verify (MASK_VERIFY_MAX): with the vocabulary under
     the gate, |A∩B| comes from popcount(maskA AND maskB) over bit
     positions ASSIGNED by the sorted vocabulary — a bijection, no
     hashing, so no collision caveat at all. The result (pairs AND the
     rounded jaccard values) must be identical to the array-intersect
-    verify (mask_verify_max=0 forces it), including on a fixture whose
+    verify (MASK_VERIFY_MAX=0 forces it), including on a fixture whose
     vocabulary spans a non-multiple-of-64 bit count and docs that share
     everything / nothing, and at a threshold whose t*|d| product rounds
     up across an integer (the filter-boundary hazard pinned by
     test_prefix_jaccard_filter_boundaries)."""
     import random
 
-    from nginx_log_spark.functions import prefix_jaccard_pairs
+    from nginx_log_spark.functions import dedup, prefix_jaccard_pairs
 
     rng = random.Random(7)
     words = [f"w{i:02d}" for i in range(40)]
@@ -1305,15 +1305,18 @@ def test_prefix_jaccard_mask_verify_parity(spark):
     rows.append((200, "abcdefghijklmnopqrstuvwxyz012"))
     rows.append((201, "abcdefghijklmnopqrstuvwxyz012"[:18]))
     df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def pairs(t, mask_max=dedup.MASK_VERIFY_MAX):
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "MASK_VERIFY_MAX", mask_max)
+            return {(r.id_a, r.id_b): r.jaccard
+                    for r in prefix_jaccard_pairs(
+                        df, shingle_k=5, threshold=t
+                    ).collect()}
+
     for t in (0.56, 0.7):
-        with_masks = {(r.id_a, r.id_b): r.jaccard
-                      for r in prefix_jaccard_pairs(
-                          df, shingle_k=5, threshold=t
-                      ).collect()}
-        array_path = {(r.id_a, r.id_b): r.jaccard
-                      for r in prefix_jaccard_pairs(
-                          df, shingle_k=5, threshold=t, mask_verify_max=0
-                      ).collect()}
+        with_masks = pairs(t)
+        array_path = pairs(t, mask_max=0)
         assert with_masks == array_path, f"threshold={t}"
         assert with_masks, f"threshold={t}: vacuous fixture"
         if t == 0.56:  # the exact-boundary pair must survive both paths
@@ -1331,9 +1334,8 @@ def test_prefix_jaccard_mask_verify_parity(spark):
         return buf.getvalue()
 
     p_mask = _plan(prefix_jaccard_pairs(df, shingle_k=5, threshold=0.7))
-    p_arr = _plan(
-        prefix_jaccard_pairs(df, shingle_k=5, threshold=0.7, mask_verify_max=0)
-    )
+    monkeypatch.setattr(dedup, "MASK_VERIFY_MAX", 0)
+    p_arr = _plan(prefix_jaccard_pairs(df, shingle_k=5, threshold=0.7))
     assert "bit_count" in p_mask and "array_intersect" not in p_mask
     assert "array_intersect" in p_arr
 
@@ -1367,14 +1369,16 @@ def test_prefix_jaccard_filter_boundaries(spark):
         assert fast == exact, f"broadcast_verify={bcast}: {fast} vs {exact}"
 
 
-def test_prefix_jaccard_freq_head_parity_under_skew(spark):
-    """Stop-shingle skew hardening (freq_head_bcast): on an adversarial
-    fixture where EVERY doc shares the same boilerplate (those shingles'
-    df = n, maximal skew in the frequency-annotation join), the
-    broadcast-head/tail-shuffle split must return exactly the single
-    shuffle join's pairs — _df values are identical either way — for a
-    head cap smaller than, equal to, and larger than the hot vocabulary."""
-    from nginx_log_spark.functions import prefix_jaccard_pairs
+def test_prefix_jaccard_freq_head_parity_under_skew(spark, monkeypatch):
+    """Stop-shingle skew hardening (FREQ_HEAD_BCAST) of the relational
+    path: on an adversarial fixture where EVERY doc shares the same
+    boilerplate (those shingles' df = n, maximal skew in the
+    frequency-annotation join), the broadcast-head/tail-shuffle split
+    must return exactly the exhaustive shingle self-join's pairs, for a
+    head cap smaller than, equal to, and larger than the hot vocabulary.
+    RANK_BCAST_MAX=0 sends every call down the relational path, which
+    is the only one with a head/tail split."""
+    from nginx_log_spark.functions import dedup, ngram_jaccard_pairs, prefix_jaccard_pairs
 
     boiler = "common boilerplate header shared by every single document here"
     rows = [(i, f"doc number {i} unique payload u{i}a u{i}b u{i}c " + boiler)
@@ -1382,16 +1386,16 @@ def test_prefix_jaccard_freq_head_parity_under_skew(spark):
     rows += [(100 + i, rows[i][1]) for i in range(10)]  # identical clones
     df = spark.createDataFrame(rows, "doc_id long, text string")
     want = {(r.id_a, r.id_b): r.jaccard
-            for r in prefix_jaccard_pairs(
-                df, shingle_k=5, threshold=0.7, freq_head_bcast=None
-            ).collect()}
+            for r in ngram_jaccard_pairs(df, shingle_k=5, threshold=0.7).collect()}
     assert want, "vacuous fixture"
+    monkeypatch.setattr(dedup, "RANK_BCAST_MAX", 0)
     for cap in (4, 64, 100_000):
+        monkeypatch.setattr(dedup, "FREQ_HEAD_BCAST", cap)
         got = {(r.id_a, r.id_b): r.jaccard
                for r in prefix_jaccard_pairs(
-                   df, shingle_k=5, threshold=0.7, freq_head_bcast=cap
+                   df, shingle_k=5, threshold=0.7
                ).collect()}
-        assert got == want, f"freq_head_bcast={cap}"
+        assert got == want, f"FREQ_HEAD_BCAST={cap}"
 
 
 def test_temperature_resample_flattens_mixture(spark):

@@ -11,11 +11,12 @@ from __future__ import annotations
 import random
 import re
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from nginx_log_spark.parse import oracle
-from nginx_log_spark.parse.parser import _CORE_RE, _parse_pdf
+from nginx_log_spark.parse.arrow_parser import _parse_binary_lines
+from nginx_log_spark.parse.parser import _CORE_RE
 
 hypothesis = pytest.importorskip("hypothesis", reason="hypothesis not installed")
 from hypothesis import given, settings  # noqa: E402
@@ -120,15 +121,15 @@ def test_hypothesis_parity(s):
     assert regex_parse(s) == oracle.parse_line(s)
 
 
-def test_parse_pdf_vectorized_matches_scalar():
-    lines = pd.Series(list(EDGES))
-    out = _parse_pdf(lines)
+def test_parse_binary_lines_vectorized_matches_scalar():
+    lines = pa.array([line.encode("latin-1") for line in EDGES], pa.binary())
+    out = _parse_binary_lines(lines)
     for i, line in enumerate(EDGES):
         exp = oracle.parse_line(line)
-        assert bool(out["valid"].iloc[i]) == (exp is not None)
+        assert out["valid"][i].as_py() == (exp is not None)
         if exp:
             for k, v in exp.items():
-                assert out[k].iloc[i] == v
+                assert out[k][i].as_py() == v
 
 
 def test_extended_tail_oracle():

@@ -243,34 +243,35 @@ def test_prefix_jaccard_is_equi_join_on_prefix(spark, docs):
     p = plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-    # bounded verify, not a re-join on shingles: either the array
-    # intersect or (round 6, small-vocabulary gate) the popcount of the
-    # per-doc bitset masks
-    assert "array_intersect" in p or "bit_count" in p, p
+    # bounded verify, not a re-join on shingles: the documents' vocabulary
+    # is under MASK_VERIFY_MAX, so the popcount of the per-doc bitset
+    # masks replaces the array intersect
+    assert "bit_count" in p and "array_intersect" not in p, p
 
 
-def test_prefix_jaccard_freq_head_joins_broadcast(spark, docs):
+def test_prefix_jaccard_freq_head_joins_broadcast(spark, docs, monkeypatch):
     """Stop-shingle skew hardening of the RELATIONAL (large-vocabulary)
-    path: with freq_head_bcast on and the in-row rank fast path disabled
-    (rank_bcast_max=0), the Zipf-head frequency annotation must be
+    path: with the in-row rank fast path gated off (RANK_BCAST_MAX=0) and
+    a 64-shingle head, the Zipf-head frequency annotation must be
     BROADCAST joins (hot inner + the two anti-join exclusions) so the
     skewed shingle key never routes its row mass through one shuffle
     partition; only the bounded-df tail takes a shuffle join."""
-    from nginx_log_spark.functions import prefix_jaccard_pairs
+    from nginx_log_spark.functions import dedup, prefix_jaccard_pairs
 
-    p = plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7,
-                                  freq_head_bcast=64, rank_bcast_max=0))
+    monkeypatch.setattr(dedup, "FREQ_HEAD_BCAST", 64)
+    monkeypatch.setattr(dedup, "RANK_BCAST_MAX", 0)
+    p = plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7))
     # head annotate + ex anti + freq anti, all hinted broadcast
     assert p.count("BroadcastHashJoin") >= 3, p
 
 
-def test_prefix_jaccard_rank_bcast_path_no_window(spark, docs):
+def test_prefix_jaccard_rank_bcast_path_no_window(spark, docs, monkeypatch):
     """The round-6 broadcast-vocabulary fast path (default when the
     vocabulary fits) must compute prefixes in-row: no rank Window and no
     shuffle of the exploded shingle stream before the candidate join —
     the skewed shingle key appears only in the prefix equi-join, which
     holds each doc's RAREST shingles by construction."""
-    from nginx_log_spark.functions import prefix_jaccard_pairs
+    from nginx_log_spark.functions import dedup, prefix_jaccard_pairs
 
     out = prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7)
     p = plan(out)
@@ -282,8 +283,8 @@ def test_prefix_jaccard_rank_bcast_path_no_window(spark, docs):
     assert "CartesianProduct" not in p
     # result identity with the relational path (exactness under any
     # global prefix order + exact verify)
-    rel = prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7,
-                               rank_bcast_max=0)
+    monkeypatch.setattr(dedup, "RANK_BCAST_MAX", 0)
+    rel = prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, rel.collect()))
 
 

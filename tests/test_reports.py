@@ -90,17 +90,6 @@ def test_bad_code_breakdown(parsed, gold):
     assert list(got.status) == sorted(got.status, key=str)
 
 
-def test_bad_code_sections(parsed, gold):
-    got = R.bad_code_sections(parsed).toPandas()
-    exp = (
-        gold[gold.exp_status != "200"].groupby("exp_status").size()
-        .reset_index(name="hits").rename(columns={"exp_status": "status"})
-        .sort_values("status").reset_index(drop=True)
-    )
-    assert list(got.status) == list(exp.status)
-    assert list(got.hits) == list(exp.hits)
-
-
 def test_hourly_traffic(parsed, gold):
     got = R.hourly_traffic(parsed).toPandas()
     ts = pd.to_datetime(gold.exp_time_local, format="%d/%b/%Y:%H:%M:%S %z", utc=True)
