@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nginx_log_spark.session import local_frame
+
 BUCKET_BITS = 16  # /16 bucket key for the equi-join
 
 
@@ -153,8 +155,12 @@ def enrich_geoip(
         return df.withColumn("country", F.lit(None).cast("string")).withColumn(
             "asn", F.lit(None).cast("string")
         )
-    dim = spark.createDataFrame(
-        dim_rows, schema="start_ip long, end_ip long, prefix_len int, country string, asn string, bucket long"
+    cols = ("start_ip", "end_ip", "prefix_len", "country", "asn", "bucket")
+    # a LocalRelation: the broadcast starts no Python worker
+    dim = local_frame(
+        spark,
+        [tuple(r[c] for c in cols) for r in dim_rows],
+        "start_ip long, end_ip long, prefix_len int, country string, asn string, bucket long",
     )
     shift = 32 - BUCKET_BITS
     fact = with_ip_int(df, ip_col, "_ip_int").withColumn(

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nginx_log_spark.functions._parallel import ensure_parallelism
+from nginx_log_spark.session import local_frame
 
 
 def _norm(text: Column) -> Column:
@@ -866,8 +867,8 @@ def prefix_jaccard_pairs(
             .limit(FREQ_HEAD_BCAST)
             .collect()
         )
-        head = spark.createDataFrame(
-            [(r["_s"], r["_df"]) for r in head_rows], "_s string, _df long"
+        head = local_frame(
+            spark, [(r["_s"], r["_df"]) for r in head_rows], "_s string, _df long"
         )
         hot = ex.join(F.broadcast(head), "_s")  # map-side: no hot-key shuffle
         tail_freq = freq.join(F.broadcast(head.select("_s")), "_s", "left_anti")

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nginx_log_spark.session import local_frame
+
 _TWO32 = float(1 << 32)
 
 
@@ -63,8 +65,8 @@ def stratified_sample(
     """Per-stratum Bernoulli rates (e.g. the source-mixture weights of a
     training-data recipe). The rate table is a broadcast join — never a
     shuffle of the fact table; unknown strata fall back to default_rate."""
-    spark = df.sparkSession
-    rate_df = spark.createDataFrame(
+    rate_df = local_frame(
+        df.sparkSession,
         [(k, float(v)) for k, v in sorted(rates.items())],
         f"{strata_col} string, _rate double",
     )

@@ -1,10 +1,12 @@
 """End-to-end pipeline: read -> parse -> enrich -> route -> aggregate.
 
 The Spark restatement of the reference's single fused pass (c/main.c:407-478):
-one scan feeds parse; the parsed intermediate is persisted once and fans out
-to the routed sinks, the metrics and the report (``render_full_report``
-over ``parsed``, one fused job) — the multi-aggregate sharing the C code
-gets from hand fusion, we get from ``persist``.
+one scan feeds parse and the fan-out write. The sinks are the
+materialization: every result frame — the parsed rows, accepted, rejects,
+the metrics and the report (``render_full_report`` over ``parsed``, one
+fused query) — reads the committed output directory, so later scans read
+pruned parquet columns instead of re-running the parse or holding a
+second in-memory copy of it.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from nginx_log_spark.checkpoint import partition_metrics
 from nginx_log_spark.enrich import default_cidr_table, enrich_geoip, enrich_ua
 from nginx_log_spark.parse import parse_sequences
-from nginx_log_spark.route import fan_out_write, split_rejects, with_status_class
+from nginx_log_spark.route import fan_out_write, read_sinks, split_rejects, with_status_class
 
 
 @dataclass
@@ -31,15 +33,20 @@ class PipelineResult:
 def run_pipeline(
     spark: SparkSession, seq: DataFrame, out_base: str | None = None
 ) -> PipelineResult:
-    """seq: (doc_id, tokens, n_tok, source). Writes sinks iff out_base given;
-    otherwise runs no Spark job (every result frame is lazy)."""
-    parsed = with_status_class(parse_sequences(seq)).persist()
+    """seq: (doc_id, tokens, n_tok, source).
+
+    With ``out_base`` the parse runs once, in the sink write, and every
+    result frame reads the written sinks (same columns, order and types as
+    the lazy parse). Without it no Spark job runs: every result frame is
+    the lazy parse."""
+    parsed = with_status_class(parse_sequences(seq))
+    sinks: dict[str, str] = {}
+    if out_base:
+        sinks = fan_out_write(parsed, out_base)
+        parsed = read_sinks(spark, out_base, parsed.schema)
     accepted, rejects = split_rejects(parsed)
     accepted = enrich_ua(enrich_geoip(accepted, default_cidr_table(), spark=spark))
-    res = PipelineResult(
+    return PipelineResult(
         parsed=parsed, accepted=accepted, rejects=rejects,
-        metrics=partition_metrics(parsed),
+        metrics=partition_metrics(parsed), sinks=sinks,
     )
-    if out_base:
-        res.sinks = fan_out_write(parsed, out_base)
-    return res

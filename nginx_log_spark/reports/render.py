@@ -9,7 +9,7 @@ binary (byte-equal modulo within-table tie order — the reference's qsort
 is unstable, c/hash.c:173-200); that test skips when the reference source
 is not mounted.
 
-Engine side: ONE fused Spark job (``render_full_report`` runs
+Engine side: ONE fused query (``render_full_report`` runs
 reports.fused_reports) supplies every table, the distinct-key counts
 (section_keys) and the header totals (section_total/section_bytes) in a
 single collect — the renderer itself is pure driver-side string work over
@@ -197,7 +197,7 @@ def render_full_report(
     parsed: DataFrame, k: int = 100, width: int | None = None, color: bool = True
 ) -> str:
     """Render the report off a PARSED (valid-only) DataFrame: one fused
-    Spark job (reports.fused_reports — one scan, one shuffle), one collect."""
+    query (reports.fused_reports — one scan, three shuffles), one collect."""
     from nginx_log_spark.reports.reports import fused_reports
 
     # driver-sized by construction: fused_reports emits only report rows —

@@ -5,8 +5,8 @@ reference's single pass (c/main.c:460-477) plus its report-time sort/top-K
 (c/main.c:246-360); the graded queries call them one at a time. All take
 the PARSED DataFrame (output of ``parse_sequences``/``parse_lines``, already
 filtered to ``valid``) and return unexecuted DataFrames. The full report
-comes from ``fused_reports``: every aggregate in one scan and one shuffle —
-the Spark analogue of the reference computing 10 aggregates in one pass.
+comes from ``fused_reports``: every aggregate in one scan and one linear
+chain of three shuffles — the Spark analogue of the reference computing 10 aggregates in one pass.
 
 Scale notes (100 TB):
 - every report is groupBy(low-cardinality key) -> partial+final hash agg:
@@ -22,9 +22,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql.window import WindowSpec
 
 TOP_K = 100  # c/main.c:252
 
@@ -91,12 +94,10 @@ def bad_code_breakdown(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
     print_code_long c/main.c:323-360).
 
     One groupBy(status, request) replaces the reference's 999 sub-tables;
-    the per-section top-K is the one genuinely windowed operator — ranked
-    two-phase (pre-rank within (status, hash-bucket of request), exact rank
-    on the ≤ k·buckets survivors) so no single task ever sorts a hot status
-    code's full aggregate, matching the fused path's scale shape
-    (_rank_partials). Section totals come from a ~10²-row broadcast
-    aggregate, not the big window. Output is ordered (status asc, cnt desc,
+    the per-section top-K is the one genuinely windowed operator, ranked
+    by ``_two_phase_rank`` like the fused path: no single task ever sorts a
+    hot status code's full aggregate, and the section totals ride the
+    ranking's own shuffles. Output is ordered (status asc, cnt desc,
     request asc) like the section loop at c/main.c:517-523.
     """
     agg = (
@@ -105,26 +106,9 @@ def bad_code_breakdown(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     tot = parsed.agg(F.count(F.lit(1)).alias("_tot"))
-    sect = agg.groupBy(F.col("status").alias("_ss")).agg(
-        F.sum("cnt").alias("section_total")
-    )
-    buckets = 64
-    pre_w = W.partitionBy("status", F.pmod(F.xxhash64("request"), F.lit(buckets)))
-    sec = W.partitionBy("status")
-    ranked = (
-        agg.withColumn(
-            "_rn1", F.row_number().over(pre_w.orderBy(F.desc("cnt"), F.asc("request")))
-        )
-        .filter(F.col("_rn1") <= k)
-        .drop("_rn1")
-        .withColumn(
-            "rn",
-            F.row_number().over(sec.orderBy(F.desc("cnt"), F.asc("request"))),
-        )
-        .filter(F.col("rn") <= k)
-        .join(F.broadcast(sect), F.col("status") == F.col("_ss"))
-        .drop("_ss")
-    )
+    ranked = _two_phase_rank(
+        agg, ["status"], "request", {"rn": "cnt"}, {"section_total": F.sum("cnt")}, k
+    ).filter(F.col("rn") <= k)
     return (
         ranked.crossJoin(F.broadcast(tot))
         .select(
@@ -136,6 +120,66 @@ def bad_code_breakdown(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
             F.round(F.col("section_total") / F.col("_tot") * 100.0, 2).alias("section_pct_of_total"),
         )
         .orderBy(F.asc("status"), F.desc("cnt"), F.asc("request"))
+    )
+
+
+_RANK_BUCKETS = 64
+
+
+def _two_phase_rank(
+    agg: DataFrame,
+    section: list[str],
+    key: str,
+    ranks: dict[str, str],
+    totals: dict[str, Column],
+    k: int,
+) -> DataFrame:
+    """Exact per-section top-k ranks and section totals over ``agg`` (one
+    row per (*section, key)) in two shuffles.
+
+    ``ranks`` maps each output rank column to the value it ranks by
+    (value desc, key asc). ``totals`` maps each output total column to an
+    aggregate over the section's rows; every aggregate must be additive
+    (a sum or a count), because it is summed from per-bucket parts.
+
+    Phase 1 ranks within (section, hash-bucket of the key) and keeps the
+    rows in any ranking's bucket top-k: a row in a section's top-k by
+    some value is top-k in its own bucket, so the survivors (≤
+    len(ranks)·k·buckets per section) contain every answer. Phase 2
+    ranks the survivors exactly. A survivor kept only through one ranking
+    can get another rank too low, but never ≤ k: the true top-k of that
+    ranking all survive and outrank it. So every row and rank under the
+    cut equals the one-window plan's.
+
+    The section totals need no second pass: phase 1 computes each
+    bucket's totals and carries them on the bucket's first row by the
+    first ranking, which always survives the cut. Phase 2 sums the
+    carries. The bucket is a column, not an expression in the window
+    spec, so both rankings of a phase share one exchange.
+    """
+    orders = {r: [F.desc(v), F.asc(key)] for r, v in ranks.items()}
+    lead = next(iter(ranks))
+
+    def windows(w: WindowSpec) -> tuple[dict[str, Column], WindowSpec]:
+        # the lead ranking and the totals' full frame share one window
+        # spec, so they run in one Window operator after one sort
+        rn = {r: F.row_number().over(w.orderBy(*o)) for r, o in orders.items()}
+        whole = w.orderBy(*orders[lead]).rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        return rn, whole
+
+    rn, whole = windows(W.partitionBy(*section, "_bucket"))
+    pre = agg.withColumn("_bucket", F.pmod(F.xxhash64(key), F.lit(_RANK_BUCKETS))).select(
+        *agg.columns,
+        *[rn[r].alias("_b" + r) for r in ranks],
+        *[F.when(rn[lead] == 1, c.over(whole)).alias(t) for t, c in totals.items()],
+    )
+    keep = functools.reduce(lambda a, b: a | b, [F.col("_b" + r) <= k for r in ranks])
+    pre = pre.filter(keep)
+    rn, whole = windows(W.partitionBy(*section))
+    return pre.select(
+        *agg.columns,
+        *[rn[r].alias(r) for r in ranks],
+        *[F.sum(t).over(whole).alias(t) for t in totals],
     )
 
 
@@ -258,7 +302,7 @@ _SEP = "\x01"
 
 
 def fused_reports(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
-    """ALL count-style reports in ONE scan + ONE shuffle — the Spark
+    """ALL count-style reports in ONE scan and one linear plan — the Spark
     restatement of the reference's fused multi-aggregate loop
     (c/main.c:460-477).
 
@@ -266,7 +310,8 @@ def fused_reports(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
     structs in the explode triple string-copy garbage and anti-scale under
     GC pressure; measured 2.6x slower), then one groupBy(dim, key) with
     map-side partial agg (only ~10^4-10^5 aggregated keys shuffle), then
-    ONE window ranking per dim. bytes_by_request needs no extra dim: the
+    the two-phase per-dim ranking (``_rank_partials``: three shuffles in
+    all, no broadcast branch). bytes_by_request needs no extra dim: the
     request dim already aggregates sum(bytes), ranked via rn_bytes.
 
     Output: (dim, key, key2, cnt, bytes, section_total, section_bytes,
@@ -302,75 +347,56 @@ def fused_reports(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
     return _rank_partials(partials, k)
 
 
-def _rank_partials(agg: DataFrame, k: int, buckets: int = 64) -> DataFrame:
+def _rank_partials(agg: DataFrame, k: int) -> DataFrame:
     """Final agg + per-dim top-K ranking over (dim_id, key0, cnt, bytes)
     partials — shared tail of both fused implementations.
 
-    Two-phase top-K: a single window PARTITIONED ONLY BY DIM would sort the
-    whole per-second time dimension (millions of aggregated rows at scale)
-    in ONE task — the classic anti-scale single-partition window. Phase 1
-    pre-ranks within (dim, section, hash-bucket of the key): any global
-    top-k row (by count OR by bytes) is top-k in its own bucket
-    (bucket ⊆ dim), so the survivors (≤ 2·k·buckets per dim) provably
-    contain both answers; phase 2 computes the EXACT ranks on that small
-    set. Phase 1 retains the per-bucket bytes top-k for EVERY dim (not
-    just the request dim): a row kept only via one ranking can carry the
-    other rank underestimated vs the full set, but never below k+1 — the
-    global top-k of that ranking all survive and outrank it — so every
-    `rn <= k` / `rn_bytes <= k` consumer sees identical rows and ranks as
-    the one-window plan, for every dim.
+    One linear plan with three exchanges: the final aggregate, then the
+    two phases of ``_two_phase_rank``. A single window PARTITIONED ONLY BY
+    DIM would sort the whole per-second time dimension (millions of
+    aggregated rows at scale) in ONE task — the classic anti-scale
+    single-partition window; phase 1 pre-ranks within (dim, section,
+    hash-bucket of the key) instead. Phase 1 keeps the per-bucket bytes
+    top-k for EVERY dim, not just the request dim, so every `rn <= k` /
+    `rn_bytes <= k` consumer sees the one-window plan's rows and ranks.
 
     Section totals (header totals / per-code subtotals, c/main.c:487-494,
-    :326-331) come from a separate ~10²-row aggregate broadcast back, not
-    from the big window.
+    :326-331) are the sums of the per-bucket totals phase 1 carries on
+    each bucket's top row: exact, with no broadcast and no second scan.
     """
     agg = agg.groupBy("dim_id", "key0").agg(
         F.sum("cnt").alias("cnt"), F.sum("bytes").alias("bytes")
     )
     is_bad = F.col("dim_id") == 9
+    # positional split: status is exactly 3 digits (see _SEP note)
+    status = F.substring(F.col("key0"), 1, 3)
     named = agg.select(
         F.element_at(F.array(*[F.lit(d) for d in _FUSED_DIMS]), F.col("dim_id") + 1).alias("dim"),
         F.col("dim_id"),
-        # positional split: status is exactly 3 digits (see _SEP note)
-        F.when(is_bad, F.substring(F.col("key0"), 1, 3)).otherwise(F.col("key0")).alias("key"),
+        F.when(is_bad, status).otherwise(F.col("key0")).alias("key"),
         F.when(is_bad, F.expr("substring(key0, 5)")).alias("key2"),
         F.col("key0"),
         "cnt",
         "bytes",
+        F.when(is_bad, status).alias("_sect"),
     )
-    sect_key = F.when(F.col("dim_id") == 9, F.col("key"))
-    sect = named.groupBy(F.col("dim_id").alias("_sd"), sect_key.alias("_sk")).agg(
-        F.sum("cnt").alias("section_total"),
-        F.sum("bytes").alias("section_bytes"),
-        F.count(F.lit(1)).alias("section_keys"),
+    ranked = _two_phase_rank(
+        named,
+        ["dim_id", "_sect"],
+        "key0",
+        {"rn": "cnt", "rn_bytes": "bytes"},
+        {
+            "section_total": F.sum("cnt"),
+            "section_bytes": F.sum("bytes"),
+            "section_keys": F.count(F.lit(1)),
+        },
+        k,
     )
-    wp = W.partitionBy(
-        "dim_id", sect_key, F.pmod(F.xxhash64("key0"), F.lit(buckets))
-    )
-    pre = (
-        named.withColumn(
-            "_rn1", F.row_number().over(wp.orderBy(F.desc("cnt"), F.asc("key0")))
-        )
-        .withColumn(
-            "_rb1", F.row_number().over(wp.orderBy(F.desc("bytes"), F.asc("key0")))
-        )
-        .filter((F.col("_rn1") <= k) | (F.col("_rb1") <= k))
-        .drop("_rn1", "_rb1")
-    )
-    w = W.partitionBy("dim_id", sect_key)
-    return (
-        pre.withColumn("rn", F.row_number().over(w.orderBy(F.desc("cnt"), F.asc("key0"))))
-        .withColumn("rn_bytes", F.row_number().over(w.orderBy(F.desc("bytes"), F.asc("key0"))))
-        .filter((F.col("rn") <= k) | ((F.col("dim_id") == 3) & (F.col("rn_bytes") <= k)))
-        .join(
-            F.broadcast(sect),
-            (F.col("dim_id") == F.col("_sd"))
-            & (sect_key.eqNullSafe(F.col("_sk"))),
-        )
-        .select(
-            "dim", "dim_id", "key", "key2", "cnt", "bytes",
-            "section_total", "section_bytes", "section_keys", "rn", "rn_bytes",
-        )
+    return ranked.filter(
+        (F.col("rn") <= k) | ((F.col("dim_id") == 3) & (F.col("rn_bytes") <= k))
+    ).select(
+        "dim", "dim_id", "key", "key2", "cnt", "bytes",
+        "section_total", "section_bytes", "section_keys", "rn", "rn_bytes",
     )
 
 

@@ -11,6 +11,7 @@ from nginx_log_spark.route.router import (  # noqa: F401
     fan_out_write,
     iceberg_catalog_available,
     iceberg_fan_out,
+    read_sinks,
     salted_count,
     salted_join,
     split_rejects,

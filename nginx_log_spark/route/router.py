@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def with_status_class(df: DataFrame, status_col: str = "status") -> DataFrame:
@@ -93,6 +94,19 @@ def fan_out_write(
         "routed": f"{base_path}/sink=routed",
         "rejects": f"{base_path}/sink=rejects",
     }
+
+
+def read_sinks(spark, base_path: str, schema: T.StructType) -> DataFrame:
+    """Every row ``fan_out_write(parsed, base_path)`` committed (parquet),
+    as a frame with ``schema`` — the written frame's columns, in its order.
+
+    The explicit schema also types the partition columns, so a source like
+    "2024" reads back as the string it was, not an inferred int. Hive's
+    default-partition rule still applies: an empty-string source reads
+    back null.
+    """
+    tagged = T.StructType(schema.fields + [T.StructField("sink", T.StringType())])
+    return spark.read.schema(tagged).parquet(base_path).select(*schema.names)
 
 
 def _tag_sinks(parsed: DataFrame) -> DataFrame:

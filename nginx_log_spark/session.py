@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -71,6 +71,28 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _warm_session(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A driver-side table (``rows`` in ``schema`` column order, a DDL
+    string) as a LocalRelation.
+
+    The rows reach the JVM as one Arrow table, so the plan is a
+    LocalTableScan and broadcasting it runs no Spark job.
+    ``createDataFrame(list)`` plans a Python RDD instead: the broadcast
+    then runs a job that starts Python workers only to unpickle the rows.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def _warm_session(spark: SparkSession) -> None:

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,6 +65,9 @@ def test_geoip_enrich_is_broadcast_equi_join(spark, sf_dir):
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
     assert "SortMergeJoin" not in p  # fact side must not shuffle
+    # the dim is a LocalRelation: broadcasting it starts no Python worker
+    assert "LocalTableScan" in p
+    assert "ExistingRDD" not in p
 
 
 def test_lsh_pairs_is_equi_join(spark, sf_dir):
@@ -109,8 +113,11 @@ def test_fused_report_partials_are_map_side(spark, sf_dir):
 def test_rank_partials_has_no_per_dim_single_window(spark):
     """The fused tail's heavy ranking window must partition by the hash
     BUCKET as well as (dim, section) — a window keyed only by dim sorts the
-    whole per-second dimension in one task at scale. The section totals
-    must come from a broadcast-joined aggregate, not the big window."""
+    whole per-second dimension in one task at scale. The whole report is
+    one linear plan of three shuffles (final aggregate, phase 1, phase 2):
+    the section totals ride those shuffles, no branch is broadcast back."""
+    from nginx_log_spark.datagen import loggen
+    from nginx_log_spark.parse import parse_sequences
     from nginx_log_spark.reports import reports as R
 
     partials = spark.createDataFrame(
@@ -120,15 +127,20 @@ def test_rank_partials_has_no_per_dim_single_window(spark):
     p = plan(R._rank_partials(partials, 100))
     # phase-1 window partition spec includes the pmod(xxhash64(...)) bucket
     assert "pmod" in p and "xxhash64" in p
-    # section totals ride a broadcast join, not window sums over the big set
-    assert "BroadcastExchange" in p
+    assert re.search(r"hashpartitioning\(dim_id#\d+, _sect#\d+, _bucket#\d+L?, ", p)
+
+    parsed = parse_sequences(loggen.sequences_df(spark, 200, partitions=2))
+    p = plan(R.fused_reports(parsed.filter(F.col("valid"))))
+    assert len(re.findall(r"^\(\d+\) Exchange$", p, re.M)) == 3
+    assert "BroadcastExchange" not in p
 
 
 def test_bad_code_breakdown_two_phase_rank(spark):
     """The standalone bad_code_breakdown must share the fused path's scale
     shape: phase-1 ranking partitions by (status, hash-bucket of request) —
     never a single task sorting a hot status's whole aggregate — and the
-    section totals ride a broadcast join, not the big window."""
+    section totals ride the ranking's shuffles: the only broadcast is the
+    1-row total-lines denominator."""
     from nginx_log_spark.reports import reports as R
 
     parsed = spark.createDataFrame(
@@ -138,7 +150,8 @@ def test_bad_code_breakdown_two_phase_rank(spark):
     df = R.bad_code_breakdown(parsed, 10)
     p = plan(df)
     assert "pmod" in p and "xxhash64" in p
-    assert "BroadcastExchange" in p
+    assert re.search(r"hashpartitioning\(status#\d+, _bucket#\d+L?, ", p)
+    assert len(re.findall(r"^\(\d+\) BroadcastExchange$", p, re.M)) == 1
 
 
 def test_connected_components_round_is_equi_join(spark):

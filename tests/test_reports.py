@@ -118,6 +118,26 @@ def test_render_report_smoke(parsed):
     assert "来访IP统计" in text and "HTTP流量占比统计" in text and "状态码" in text
 
 
+def test_render_full_report_runs_at_most_four_jobs(spark):
+    """The report is one linear plan: a job per shuffle map stage (final
+    aggregate, phase 1, phase 2) and the collect, nothing broadcast back."""
+    from pyspark.sql import functions as F
+
+    from nginx_log_spark.reports.render import render_full_report
+
+    sc = spark.sparkContext
+    parsed = parse_sequences(loggen.sequences_df(spark, 500, partitions=2))
+    group = "test_render_full_report_runs_at_most_four_jobs"
+    sc.setJobGroup(group, "render_full_report job count")
+    try:
+        render_full_report(parsed.filter(F.col("valid")), k=5)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs <= 4
+
+
 def test_fused_reports_match_individual(parsed, gold):
     """The one-shuffle fused query must reproduce every individual report."""
     fused = R.fused_reports(parsed, 100).toPandas()
